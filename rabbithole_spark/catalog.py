@@ -63,104 +63,13 @@ _QUERY_MODULES = (
 #: requires retiring one (or relaxing the horizon). The registry is
 #: complete against SURVEY.md §2, so this is a completion marker, not
 #: a constraint being fought.
-#: REWRITE PRIORITY (round 13, VERDICT r12 item 7): queries whose CODE
-#: was rewritten in round 12/13 AFTER their latest external row — a
-#: changed query carries more verification risk than an untouched one
-#: that is merely a round staler, so these jump the staleness order and
-#: fill the front of the next window (scripts/rotate_window.py reads
-#: this tuple). At the 200-query/50-slot saturation point each entry
-#: here displaces one untouched name's refresh by one round; the
-#: staleness test carries a matching allowance (at most this many
-#: names, at most one round past the 4-round horizon), and every
-#: displaced name is still covered by the round's fresh-process
-#: full-registry oracle sweeps. Clear this tuple when the rewritten
-#: block has its fresh rows (next rotation re-tightens the invariant).
-_REWRITE_PRIORITY = (
-    # round-13 rewrites (distinct-name Ed-Join, guarded broadcasts,
-    # verify-source selection, CC/kmeans/lloyd touches)
-    "dedup_edit_distance_prefix",
-    "dedup_edit_distance_prefix_sparse",
-    "dedup_jaccard_prefix_filter",
-    "dedup_canonical_survivors",
-    "dedup_components",
-    "dedup_semantic_semdedup",
-    "similarity_kmeans_clusters",
-    # round-12 rewrites whose last external row (r11) predates them
-    "tpch_q2_min_cost_supplier",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_excess_stock",
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "dedup_minhash_recall_audit",
-    "similarity_ann_ivf",
-    "similarity_ann_ivf_batch",
-    "similarity_ann_quantized",
-    "similarity_embedding_near_dup",
-    "text_ngram_novelty",
-    "contamination_winnow_overlap",
-)
-
 _PRIORITY_ORDER = (
-    # round-13 window = slots 0-49 (regenerated by scripts/
+    # round-14 window = slots 0-49 (regenerated by scripts/
     # rotate_window.py from the CORRECTNESS_r*.json union): registry
     # sorted by (latest external round, name) — the stalest block(s)
     # fill the window, never-checked names lead. This window draws
-    # from block(s): r10*, r11*, r12*, r9 (50 names fill the window).
-    # --- REWRITTEN since last external row (round 10) ---
-    "dedup_edit_distance_prefix_sparse",
-    # --- REWRITTEN since last external row (round 11) ---
-    "contamination_winnow_overlap",
-    "dedup_components",
-    "dedup_minhash_incremental",
-    "dedup_minhash_lsh",
-    "dedup_minhash_recall_audit",
-    "dedup_semantic_semdedup",
-    "similarity_ann_ivf",
-    "similarity_ann_ivf_batch",
-    "similarity_ann_quantized",
-    "similarity_embedding_near_dup",
-    "similarity_kmeans_clusters",
-    "text_ngram_novelty",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_excess_stock",
-    "tpch_q2_min_cost_supplier",
-    # --- REWRITTEN since last external row (round 12) ---
-    "dedup_canonical_survivors",
-    "dedup_edit_distance_prefix",
-    "dedup_jaccard_prefix_filter",
+    # from block(s): r9, r10 (50 names fill the window).
     # --- latest external row: round 9 ---
-    "agg_approx_count_distinct",
-    "agg_bool_countif",
-    "agg_corr_regression",
-    "agg_grouping_sets",
-    "agg_minmax_by",
-    "agg_percentiles",
-    "agg_stats_moments",
-    "agg_string_collect",
-    "agg_theta_sketch_setops",
-    "contamination_ngram_overlap",
-    "contamination_semantic_screen_bcast",
-    "dedup_duplicate_ngram_spans",
-    "dedup_exact_documents",
-    "dedup_fingerprint",
-    "dedup_simhash",
-    "embedding_centroids",
-    "join_attribution_clicks",
-    "join_left_customer_orders",
-    "join_salted_skew",
-    "lateral_posexplode_words",
-    "mixture_dsir_importance",
-    "mixture_resample_by_lang",
-    "mixture_token_budget",
-    "multimodal_binary_stats",
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "multimodal_resize_pipeline",
-    "pii_redaction",
-    "pipeline_clean_corpus",
-    "pipeline_param_mapping",
     "profile_orders_columns",
     "similarity_hard_negatives_bcast",
     "similarity_range_search",
@@ -314,6 +223,57 @@ _PRIORITY_ORDER = (
     "tpch_q3_shipping_priority",
     "udf_cogrouped_asof",
     "window_tumbling_hourly",
+    # --- latest external row: round 13 ---
+    "agg_approx_count_distinct",
+    "agg_bool_countif",
+    "agg_corr_regression",
+    "agg_grouping_sets",
+    "agg_minmax_by",
+    "agg_percentiles",
+    "agg_stats_moments",
+    "agg_string_collect",
+    "agg_theta_sketch_setops",
+    "contamination_ngram_overlap",
+    "contamination_semantic_screen_bcast",
+    "contamination_winnow_overlap",
+    "dedup_canonical_survivors",
+    "dedup_components",
+    "dedup_duplicate_ngram_spans",
+    "dedup_edit_distance_prefix",
+    "dedup_edit_distance_prefix_sparse",
+    "dedup_exact_documents",
+    "dedup_fingerprint",
+    "dedup_jaccard_prefix_filter",
+    "dedup_minhash_incremental",
+    "dedup_minhash_lsh",
+    "dedup_minhash_recall_audit",
+    "dedup_semantic_semdedup",
+    "dedup_simhash",
+    "embedding_centroids",
+    "join_attribution_clicks",
+    "join_left_customer_orders",
+    "join_salted_skew",
+    "lateral_posexplode_words",
+    "mixture_dsir_importance",
+    "mixture_resample_by_lang",
+    "mixture_token_budget",
+    "multimodal_binary_stats",
+    "multimodal_feature_extract",
+    "multimodal_frame_sample",
+    "multimodal_resize_pipeline",
+    "pii_redaction",
+    "pipeline_clean_corpus",
+    "pipeline_param_mapping",
+    "similarity_ann_ivf",
+    "similarity_ann_ivf_batch",
+    "similarity_ann_quantized",
+    "similarity_embedding_near_dup",
+    "similarity_kmeans_clusters",
+    "text_ngram_novelty",
+    "tpch_q11_important_stock",
+    "tpch_q16_supplier_part_counts",
+    "tpch_q20_excess_stock",
+    "tpch_q2_min_cost_supplier",
 )
 
 
@@ -348,14 +308,7 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (registration is an import side effect)."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # Module not built yet (incremental rounds) — skip, don't break
-            # the whole surface over one missing file.
-            if exc.name and exc.name.startswith("rabbithole_spark"):
-                continue
-            raise
+        importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in _PRIORITY_ORDER:
         if name in _REGISTRY:

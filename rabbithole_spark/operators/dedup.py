@@ -161,81 +161,27 @@ def connected_components(
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition before CPU-heavy per-row compute —
-    SCALE-ADAPTIVE (round 12): a no-op when the input is already at
-    least as wide as the target.
+    """Round-robin repartition before CPU-heavy per-row compute, to
+    ``partitions`` or the session's default parallelism.
 
     Small single-file scans arrive as one input split, serializing all
     downstream text processing onto one core; the same pathology hits a
     real cluster whenever upstream partitioning is coarser than the
     executor count. One tiny shuffle of the raw rows buys full-width
-    parallelism for the expensive projection that follows. But the fix
-    must not become its own pathology at scale: a 100 TB corpus scan
-    is already thousands of splits, and an unconditional repartition
-    there is a full payload shuffle bought for nothing (guide §2.5 —
-    repartition after the read to FIX coarse input, not always).
+    parallelism for the expensive projection that follows.
 
-    An EXPLICIT ``partitions`` argument is a hard request and always
-    repartitions (round-13 advice fix: the adaptive no-op silently
-    ignored it). The adaptive shortcut also cannot see data skew — a
-    many-partition input concentrated in few partitions keeps its
-    layout; pass ``partitions`` explicitly to force the round-robin
-    rebalance in that case.
-
-    The width probe is only SAFE on scan-rooted plans: under AQE,
-    ``Dataset.rdd`` on a plan containing an Exchange executes the
-    upstream shuffle stages as real jobs at plan-construction time
-    (and that work re-runs at action time — round-13 advice fix). The
-    probe therefore inspects the ANALYZED LOGICAL PLAN driver-side
-    (pure metadata) and skips the adaptive shortcut — repartitioning
-    unconditionally, the pre-round-12 behavior — whenever the plan is
-    not a simple scan pipeline (joins, aggregates, windows, generators
-    or any other multi-child / width-changing node).
+    It ALWAYS repartitions, even when the input is already as wide as
+    the target. A driver-side width probe could skip the shuffle there,
+    but every input this engine spreads (the one-split documents and
+    embeddings scans, derived relations) is narrower than the default
+    parallelism at the shipped scale factors, so such a probe never
+    skips and only adds planning work. A wide input still gets the
+    round-robin rebalance, which evens out rows concentrated in few
+    partitions.
     """
-    if partitions is not None:
-        return df.repartition(partitions)
-    n = df.sparkSession.sparkContext.defaultParallelism
-    cur = _scan_width(df)
-    if cur is not None and cur >= n:
-        return df
-    return df.repartition(n)
-
-
-#: logical nodes through which a scan's partitioning survives 1:1 —
-#: anything else (Join, Aggregate, Window, Generate, Repartition,
-#: Union, ...) makes the physical width probe unsafe/meaningless and
-#: spread() falls back to the unconditional repartition.
-_SCAN_PASSTHROUGH_NODES = {
-    "Project",
-    "Filter",
-    "SubqueryAlias",
-    "LogicalRDD",
-    "LocalRelation",
-    "Relation",
-    "LogicalRelation",
-}
-
-
-def _scan_width(df: DataFrame) -> int | None:
-    """Partition width of a bare scan(+project/filter) plan, probed
-    WITHOUT running a job; None when the plan is not such a pipeline
-    (see :func:`spread` — Dataset.rdd under AQE would execute upstream
-    shuffle stages at plan time for those)."""
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        while True:
-            name = node.nodeName()
-            if name not in _SCAN_PASSTHROUGH_NODES:
-                return None
-            n_children = node.children().size()
-            if n_children == 0:
-                break
-            if n_children > 1:
-                return None
-            node = node.children().apply(0)
-        return df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - conservative fallback
-        return None
+    return df.repartition(
+        partitions or df.sparkSession.sparkContext.defaultParallelism
+    )
 
 
 def exact_dedup(
@@ -1060,10 +1006,11 @@ def qgram_prefix_edit_pairs(
     ).select("s.*").unionByName(diag)
     # Probe side spread: the id table is a single input split at bench
     # SFs, and the expansion fan-out (output rows = the full result)
-    # would otherwise generate on ONE core (guide §2.5). Both build
-    # sides are dimension-scale for the registered callers (the name
-    # table and the bounded name-pair matches) — the same declared
-    # assumption the round-12 shape broadcast the string table under.
+    # would otherwise generate on ONE core (guide §2.5). The two build
+    # sides differ in scale: `sym` is bounded by the distinct-name
+    # matches, but `ids_b` is the id table itself, bounded by corpus
+    # size rather than dimension size. Past the broadcast cap the
+    # guarded fallback shuffles the id table on `name_b` instead.
     ids_a = spread(
         strs.select(F.col("sid").alias("id_a"), F.col("txt").alias("name_a"))
     )

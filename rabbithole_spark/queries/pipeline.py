@@ -125,16 +125,11 @@ def _replay_state_partitions(spark, sf_dir: str) -> int:
     overhead; 8 partitions run the identical query in 2.4 s. Derive
     ~16 MB of scanned input per state partition with a parallelism/4
     floor, capped at the session's batch shuffle width (at cluster
-    scale the cap binds and state width tracks the batch tuning;
-    RABBITHOLE_STREAM_STATE_PARTITIONS overrides for deployments that
-    pin state width explicitly). Results are partitioning-invariant —
-    every replay query's output is keyed arithmetic or watermark
-    semantics, both independent of which store instance holds a key —
-    and the oracle sweep + driver correctness runs execute THIS
-    derivation at every SF."""
-    env = os.environ.get("RABBITHOLE_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    scale the cap binds and state width tracks the batch tuning).
+    Results are partitioning-invariant — every replay query's output is
+    keyed arithmetic or watermark semantics, both independent of which
+    store instance holds a key — and the oracle sweep + driver
+    correctness runs execute THIS derivation at every SF."""
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = max(4, spark.sparkContext.defaultParallelism // 4)
     try:
@@ -390,14 +385,14 @@ def _run_count_or_time_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hit both queries or neither."""
     from rabbithole_spark.streaming.stateful import (
         await_state_drained,
-        count_or_time_batcher_v1,
+        count_or_time_batcher,
     )
 
     name = f"stream_batcher_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir).select(
         "event_type", "event_id", "user_id"
     )
-    batched = count_or_time_batcher_v1(
+    batched = count_or_time_batcher(
         stream.groupBy("event_type"),
         "event_type string, event_id long, user_id long",
         size_limit=10,
@@ -407,7 +402,7 @@ def _run_count_or_time_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replay the flush ARITHMETIC is a function of size_limit only
         # — every key's rows arrive in one invocation, size-flushes
         # happen in-invocation, and the leftover time-flushes when its
-        # timer fires regardless of the limit value (v1 timers fire
+        # timer fires regardless of the limit value (timeouts fire
         # between micro-batches, never mid-invocation) — so the output
         # rows and tags are identical and the drain loop just stops
         # waiting out dead processing-time (~4.5 s per batcher query,

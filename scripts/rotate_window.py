@@ -44,44 +44,18 @@ def correctness_history(repo: str = REPO) -> dict[str, int]:
 
 
 def compute_order(
-    names: list[str],
-    latest: dict[str, int],
-    priority: tuple[str, ...] = (),
+    names: list[str], latest: dict[str, int]
 ) -> list[tuple[int, str, list[str]]]:
     """Rotation rule: blocks of names sorted by (latest external round,
     name) — never-checked names (latest 0) lead, then the stalest
     block, each block alphabetical. Returns [(round, label,
-    [names...]), ...] in emission order.
-
-    ``priority`` (catalog._REWRITE_PRIORITY) jumps REWRITTEN queries
-    ahead of the staleness order (round 13, VERDICT r12 item 7): a
-    query whose code changed after its last external row carries more
-    verification risk than an untouched query one round staler, and at
-    the 200/50 saturation point the only way to re-check it promptly
-    is to displace refreshes of untouched names. Never-checked names
-    still lead (a first verification outranks everything); displaced
-    names form the next window and the staleness test carries a
-    matching allowance sized by len(priority)."""
-    pri = [n for n in priority if latest.get(n, 0) > 0 and n in set(names)]
+    [names...]), ...] in emission order."""
     groups: dict[int, list[str]] = {}
     for n in names:
-        if n in pri:
-            continue
         groups.setdefault(latest.get(n, 0), []).append(n)
     out: list[tuple[int, str, list[str]]] = []
     if 0 in groups:
         out.append((0, "never externally checked", sorted(groups.pop(0))))
-    pri_groups: dict[int, list[str]] = {}
-    for n in pri:
-        pri_groups.setdefault(latest[n], []).append(n)
-    for rnd in sorted(pri_groups):
-        out.append(
-            (
-                rnd,
-                f"REWRITTEN since last external row (round {rnd})",
-                sorted(pri_groups[rnd]),
-            )
-        )
     for rnd in sorted(groups):
         out.append((rnd, f"latest external row: round {rnd}", sorted(groups[rnd])))
     return out
@@ -93,13 +67,10 @@ def render(order: list[tuple[int, list[str]]], next_round: int, window: int = 50
     # the real composition, not an assumed 0-49 = one-block layout
     taken = 0
     feeding = []
-    for rnd, label, ns in order:
+    for rnd, _, ns in order:
         if taken >= window:
             break
-        tag = "new" if rnd == 0 else (
-            f"r{rnd}*" if label.startswith("REWRITTEN") else f"r{rnd}"
-        )
-        feeding.append(tag)
+        feeding.append("new" if rnd == 0 else f"r{rnd}")
         taken += len(ns)
     total = sum(len(ns) for _, _, ns in order)
     # the feeding blocks can overshoot the cut (a block rarely ends
@@ -147,8 +118,7 @@ def rotate(check_only: bool = False) -> int:
     if unknown:
         print(f"note: {len(unknown)} historical names no longer registered "
               f"(retired): {sorted(unknown)[:5]}...")
-    priority = tuple(getattr(catalog, "_REWRITE_PRIORITY", ()))
-    order = compute_order(names, latest, priority)
+    order = compute_order(names, latest)
     next_round = (max(latest.values(), default=0)) + 1
     new_tuple = render(order, next_round)
 

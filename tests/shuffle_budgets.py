@@ -184,11 +184,10 @@ SHUFFLE_BUDGETS = {
     "similarity_ann_ivf_batch": 1,
     "similarity_ann_lsh": 0,
     "similarity_ann_quantized": 0,
-    # 0 -> 2 round 12: the scale-adaptive spread() round-robin over
-    # the single-split embeddings scan appears once per self-join side
-    # (the interpreted signature folds otherwise run on ONE core per
-    # side, measured 2.3 s each at sf0.1). At production widths the
-    # conditional spread no-ops and the plan returns to 0 exchanges.
+    # 0 -> 2 round 12: the spread() round-robin over the single-split
+    # embeddings scan appears once per self-join side (the interpreted
+    # signature folds otherwise run on ONE core per side, measured
+    # 2.3 s each at sf0.1).
     "similarity_embedding_near_dup": 2,
     # round 12: kmeans_fit_assign widen+checkpoint (see
     # dedup_semantic_semdedup) — hidden sub-plan: parquet scan + 1

@@ -61,6 +61,25 @@ def test_minhash_signatures_raise_on_null_or_empty_shingles(spark):
     assert len(sig.signature) == 8 and all(v is not None for v in sig.signature)
 
 
+def test_spread_always_repartitions(spark, tmp_path):
+    """spread() round-robins to the default parallelism even when the
+    input scan is already that wide, and an explicit width wins."""
+    from rabbithole_spark.operators.dedup import spread
+
+    path = str(tmp_path / "wide")
+    spark.range(0, 800).repartition(8).write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert wide.rdd.getNumPartitions() >= 8
+
+    n = spark.sparkContext.defaultParallelism
+    out = spread(wide)
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "Repartition" and plan.shuffle()
+    assert out.rdd.getNumPartitions() == n
+    assert spread(wide, 3).rdd.getNumPartitions() == 3
+    assert sorted(r.id for r in out.collect()) == list(range(800))
+
+
 def test_simhash_near_dups_close(spark, docs_with_dups):
     sigs = {r.doc_id: r.simhash for r in simhash(docs_with_dups, "text", "doc_id").collect()}
     hamming = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")

@@ -110,10 +110,10 @@ def _run_batcher(spark, batcher_fn, src, name, **kwargs):
 
 
 def test_count_flush_batcher_exact_size_batches(spark, tmp_path):
-    """State-v1 batcher: every size-flush emits exactly ``size_limit``
+    """Count-or-time batcher: every size-flush emits exactly ``size_limit``
     rows; each key's sub-size leftover time-flushes, so every input
     row exits exactly once with the right reason."""
-    from rabbithole_spark.streaming.stateful import count_or_time_batcher_v1
+    from rabbithole_spark.streaming.stateful import count_or_time_batcher
 
     src = str(tmp_path / "batcher_src")
     ev = table(spark, SF, "events").select("event_type", "event_id")
@@ -126,7 +126,7 @@ def test_count_flush_batcher_exact_size_batches(spark, tmp_path):
     size = 10
     out = _run_batcher(
         spark,
-        count_or_time_batcher_v1,
+        count_or_time_batcher,
         src,
         f"batcher_{uuid.uuid4().hex[:8]}",
         size_limit=size,
@@ -144,45 +144,12 @@ def test_count_flush_batcher_exact_size_batches(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
 
-def test_count_flush_batcher_v2_requires_protobuf(spark, tmp_path):
-    """The state-v2 (transformWithState) batcher needs google.protobuf
-    in the worker runtime; run it where available, skip elsewhere."""
-    pytest.importorskip("google.protobuf")
-    from rabbithole_spark.streaming.metrics import use_rocksdb_state
-    from rabbithole_spark.streaming.stateful import count_or_time_batcher
-
-    src = str(tmp_path / "batcher_v2_src")
-    ev = table(spark, SF, "events").select("event_type", "event_id").limit(40)
-    ev.coalesce(1).write.parquet(src)
-    n_total = spark.read.parquet(src).count()
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    try:
-        out = _run_batcher(
-            spark,
-            count_or_time_batcher,
-            src,
-            f"batcher_v2_{uuid.uuid4().hex[:8]}",
-            size_limit=10,
-            time_limit_s=5.0,
-        )
-        assert len(out) == n_total
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_time_flush_emits_partial_batch(spark, tmp_path):
     """With size_limit larger than the key's row count, only the
     processing-time timer can flush — rows must arrive tagged 'time'."""
     import time
 
-    from rabbithole_spark.streaming.stateful import count_or_time_batcher_v1
+    from rabbithole_spark.streaming.stateful import count_or_time_batcher
 
     src = str(tmp_path / "timeflush_src")
     spark.createDataFrame(
@@ -198,7 +165,7 @@ def test_time_flush_emits_partial_batch(spark, tmp_path):
             .load(src)
         )
         q = (
-            count_or_time_batcher_v1(
+            count_or_time_batcher(
                 stream.groupBy("k"),
                 "k string, v long",
                 size_limit=100,
