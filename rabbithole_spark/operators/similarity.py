@@ -360,13 +360,27 @@ def lloyd_iterate(
     in the low bits between runs (and vs the DuckDB replay, whose
     list_sort+list_aggregate mirrors this fold exactly) — enough to
     flip a near-equidistant cell assignment. Sorting the values first
-    makes the sum a pure function of the multiset."""
+    makes the sum a pure function of the multiset.
+
+    A vector whose length is not the centroids' ``dim`` fails the job
+    loudly (``raise_error``): the per-position fold would otherwise
+    drop a longer vector's tail and shift the centroid silently."""
     cents = [list(c) for c in centroids]
     dim = len(cents[0])
+    vec = F.col(vec_col)
+    checked = F.when(
+        F.size(vec) != dim,
+        F.raise_error(
+            F.format_string(
+                f"lloyd_iterate: vector of length %d, centroids have {dim}",
+                F.size(vec),
+            )
+        ),
+    ).otherwise(vec)
     for _ in range(iters):
         assigned = df.select(
-            F.col(vec_col).alias("__v"),
-            _nearest_cell(F.col(vec_col), cents).alias("cluster"),
+            checked.alias("__v"),
+            _nearest_cell(vec, cents).alias("cluster"),
         )
         # ONE groupBy(cluster) with the per-position sorted folds
         # computed over the collected vector lists (round 13, guide
@@ -378,10 +392,10 @@ def lloyd_iterate(
         # cluster's p-th components is the same sorted multiset the
         # old collect_list(val) group produced, so the sequential fold
         # and the division are the identical doubles. NULL positions
-        # (vectors shorter than dim — outside every registered
-        # caller's corpus) are filtered per position and a position
-        # with no values drops out of the centroid, matching the old
-        # shape's absent-(cluster, pos) behavior. Buffer note: the
+        # (NULL elements — outside every registered caller's corpus)
+        # are filtered per position and a position with no values
+        # drops out of the centroid, matching the old shape's
+        # absent-(cluster, pos) behavior. Buffer note: the
         # per-group state is now the cluster's full vector list
         # (x dim vs the old per-position groups) — bounded by the FIT
         # relation, which is the sampled set at 100 TB (fit_filter).

@@ -22,7 +22,9 @@ The estimate is ``optimizedPlan().stats().sizeInBytes`` — file-size
 derived for parquet scans and propagated through projections, so it
 is accurate for exactly the scan-rooted relations these operators
 broadcast. An estimate that cannot be read at all is treated as
-INFINITE (fail toward the shuffle plan, never toward an OOM).
+INFINITE (fail toward the shuffle plan, never toward an OOM) and
+logged as a WARNING naming the exception, so the fallback is never
+silent.
 
 The cap is read from the session conf key ``rabbithole.broadcast.cap``
 (bytes) so tests can force the fallback path; the 64 MiB default sits
@@ -31,6 +33,8 @@ and well below driver-memory hazard territory.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +46,8 @@ DEFAULT_BROADCAST_CAP = 64 * 1024 * 1024
 
 _CAP_CONF = "rabbithole.broadcast.cap"
 
+LOGGER = logging.getLogger(__name__)
+
 
 def plan_size_bytes(df: DataFrame) -> int:
     """The optimizer's size estimate for ``df`` in bytes.
@@ -49,13 +55,17 @@ def plan_size_bytes(df: DataFrame) -> int:
     Driver-side metadata only (no job runs): analysis + optimization
     of the plan, then the propagated statistics. Returns a huge
     sentinel when the estimate is unavailable so callers guard toward
-    the conservative (non-broadcast) plan.
+    the conservative (non-broadcast) plan, and logs why.
     """
     try:
         return int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
-    except Exception:  # pragma: no cover - py4j / analysis failure
+    except Exception as exc:  # py4j / analysis failure
+        LOGGER.warning(
+            "plan size estimate unavailable (%s: %s); treating it as unbounded",
+            type(exc).__name__, exc,
+        )
         return 1 << 62
 
 

@@ -8,6 +8,16 @@ Scale notes (100 TB design, tested on local[32]):
   At cluster scale you'd set it ~2-3x total cores and let AQE shrink.
 - Session timezone is pinned to UTC so timestamp semantics are
   engine-independent (parquet micros == wall values everywhere).
+- Spark keeps compiled whole-stage-codegen classes in a JVM-wide LRU
+  keyed by generated source, ``spark.sql.codegen.cache.maxEntries``
+  entries (Spark's default: 100). The registry generates far more
+  distinct classes than that, so with the default every pass over it
+  re-runs Janino on code it already compiled and each recompiled class
+  starts cold in the JIT again. :func:`get_spark` sizes the cache to
+  the registry's working set (:data:`CODEGEN_CACHE_MAX_ENTRIES`). It is
+  a *static* conf, fixed when the JVM's first session starts: a session
+  the engine did not create (one handed to :func:`prepare` by an outside
+  caller) keeps Spark's 100 entries.
 """
 
 from __future__ import annotations
@@ -31,6 +41,17 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Codegen class cache size, about twice the registry's working set.
+#: Measured at sf0.01 on 4 cores: the 14 headline queries generate ~190
+#: distinct classes and all 200 registry queries 1,968. With Spark's
+#: default of 100 entries a second registry pass recompiled 2,652
+#: classes; with 4096 it recompiled 30, all from queries whose generated
+#: source differs on every invocation, which no cache size avoids.
+#: Metaspace after both passes: 221 MB vs 224 MB at the default. Repeat
+#: with ``python scripts/codegen_census.py`` (all queries, two passes);
+#: resize when pass 1 compiles more than about half this many classes.
+CODEGEN_CACHE_MAX_ENTRIES = 4096
 
 
 def get_spark(
@@ -63,6 +84,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     return builder.getOrCreate()
 

@@ -275,6 +275,23 @@ def test_kmeans_invariants(spark):
     assert "LogicalRDD" not in sampled._jdf.queryExecution().analyzed().toString()
 
 
+def test_lloyd_rejects_ragged_vectors(spark):
+    """A vector longer than the centroids' dim fails the Lloyd step
+    loudly instead of being truncated into a shifted centroid; a
+    well-formed corpus still fits."""
+    from rabbithole_spark.operators.similarity import lloyd_iterate
+
+    cents = [[0.0, 0.0], [1.0, 1.0]]
+    good = [(0, [0.0, 0.1]), (1, [1.0, 0.9])]
+    df = spark.createDataFrame(good, "id int, v array<double>")
+    assert lloyd_iterate(df, "v", cents, 1) == [[0.0, 0.1], [1.0, 0.9]]
+    ragged = spark.createDataFrame(
+        good + [(2, [1.0, 1.0, 5.0])], "id int, v array<double>"
+    )
+    with pytest.raises(Exception, match="vector of length 3, centroids have 2"):
+        lloyd_iterate(ragged, "v", cents, 1)
+
+
 def test_decode_stub_and_fallback():
     """decode_stub really decodes when Pillow is importable, raises
     NotImplementedError otherwise; decode_or_fake always yields an

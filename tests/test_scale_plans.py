@@ -927,3 +927,27 @@ def test_guarded_broadcasts_fall_back_over_cap(spark):
         assert rows(jac_q) == jac_small
     finally:
         spark.conf.unset("rabbithole.broadcast.cap")
+
+
+def test_unreadable_size_estimate_warns_and_skips_broadcast(spark, caplog):
+    """An unreadable size estimate is treated as unbounded: the guard
+    returns its input unhinted and a WARNING names the exception, so
+    the conservative fallback is never silent."""
+    import logging
+
+    from rabbithole_spark.operators.sizing import guarded_broadcast
+
+    class Unsized:
+        sparkSession = spark
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("no plan")
+
+    stub = Unsized()
+    with caplog.at_level(logging.WARNING, logger="rabbithole_spark.operators.sizing"):
+        assert guarded_broadcast(stub) is stub
+    assert any(
+        r.levelno == logging.WARNING and "RuntimeError" in r.getMessage()
+        for r in caplog.records
+    ), caplog.records
